@@ -447,7 +447,7 @@ def q_compression_metrics(spark, sf_dir):
     # the returned DataFrame reads these blocks lazily — reclaim at exit
     atexit.register(shutil.rmtree, out, ignore_errors=True)
     encode_snapshot(spark, f"{sf_dir}/documents.parquet", out,
-                    key_col="doc_id", num_parts=8)
+                    key_col="doc_id")
     return (
         blocks_df(spark, out)
         .groupBy("column")

@@ -472,8 +472,15 @@ def make_direct_encoder(
                         kept.append(b)
                         if seen >= row_hi:
                             break
-                    # task build guarantees row_lo < row_hi within the
-                    # span, so at least one batch is always kept
+                    if not kept:
+                        # the engine's task build keeps row_lo < row_hi
+                        # inside the span; a task that breaks it would
+                        # otherwise encode zero rows without a word
+                        raise ValueError(
+                            f"row-range task reads rows [{row_lo}, "
+                            f"{row_hi}) of row groups {rgs} of "
+                            f"{row['path']!r}, which hold only {seen} "
+                            "rows")
                     tbl = pa.Table.from_batches(kept).slice(
                         row_lo - start, row_hi - row_lo
                     )
@@ -509,8 +516,8 @@ def make_direct_encoder(
 
 
 # one row per (written file, part, column): the encode task's own
-# aggregate of its blocks' metadata — what _chunk_metrics_rows used to
-# re-read from the written footers, now returned through the job itself
+# aggregate of its blocks' metadata, returned through the encode job so
+# the driver never re-reads the written footers
 TASK_META_DDL = (
     "file string, part_id int, column string, codec string, "
     "codec_params string, n_values long, raw_bytes long, enc_bytes long, "
@@ -539,11 +546,48 @@ _TASK_META_SCHEMA = pa.schema(
 )
 
 
-def make_task_writer(encode_fn, out_dir: str,
-                     row_group_bytes: int = 32 << 20):
+def fold_task_meta(agg: dict[tuple[int, str], dict], rows) -> None:
+    """Fold per-(part, column) metadata rows (TASK_META_DDL fields; a
+    ``file`` field is ignored) into ``agg``, keyed by (part_id, column):
+    counts add up, zone bounds widen, and the first non-empty
+    codec_params wins (the real params live on each salt slice's
+    block_seq-0 row, the rest are "{}"). Used per block inside the task
+    writer and per task file on the driver."""
+    for r in rows:
+        key = (int(r["part_id"]), r["column"])
+        a = agg.get(key)
+        if a is None:
+            agg[key] = a = {
+                "part_id": key[0], "column": key[1], "codec": r["codec"],
+                "codec_params": "{}", "n_values": 0, "raw_bytes": 0,
+                "enc_bytes": 0, "n_blocks": 0, "key_lo": None,
+                "key_hi": None, "key_lo_s": None, "key_hi_s": None,
+                "n_unzoned": 0, "n_unzoned_s": 0,
+            }
+        if a["codec_params"] == "{}" and r["codec_params"] not in ("", "{}"):
+            a["codec_params"] = r["codec_params"]
+        for k in ("n_values", "raw_bytes", "enc_bytes", "n_blocks",
+                  "n_unzoned", "n_unzoned_s"):
+            a[k] += int(r[k])
+        for lo, hi in (("key_lo", "key_hi"), ("key_lo_s", "key_hi_s")):
+            if r[lo] is not None:
+                a[lo] = r[lo] if a[lo] is None else min(a[lo], r[lo])
+                a[hi] = r[hi] if a[hi] is None else max(a[hi], r[hi])
+
+
+# payload bytes per block-file row group: the streaming decoder's peak
+# memory is one row group + one logical group, so finer row groups keep
+# decode tasks inside the warm allocator arena (128 MB quadruples that
+# for zero read-side benefit — payloads are opaque blobs, no
+# intra-row-group stats matter)
+ROW_GROUP_BYTES = 32 << 20
+
+
+def make_task_writer(encode_fn, out_dir: str):
     """Wrap a block-producing mapInArrow kernel so each TASK writes its
     own block parquet file with pyarrow and yields only per-(part,
-    column) METADATA rows (TASK_META_DDL) back to the JVM.
+    column) METADATA rows (TASK_META_DDL) back to the JVM. Both encode
+    paths (engine.encode_files, range and direct) write through it.
 
     Why: routing the encoded payloads through the JVM writer serializes
     every payload byte across the Arrow boundary and pays the JVM
@@ -556,9 +600,10 @@ def make_task_writer(encode_fn, out_dir: str,
     commits exactly the returned file set (engine writes a _FILES
     marker and removes stray files before renaming the chunk dir), so
     a failed/retried attempt's leftovers are never read back. Row
-    groups are flushed every ~row_group_bytes of payload so the
-    streaming decoder's peak stays one row group (same 32 MB policy as
-    the old JVM writer)."""
+    groups are flushed every ~ROW_GROUP_BYTES of payload. Payloads are
+    already codec-compressed, so parquet compression is off, and
+    parquet dictionary pages are off too (building them over MB-sized
+    unique payload blobs cost ~13x the write time for zero size win)."""
 
     def write_tasks(batches):
         import os as _os
@@ -573,47 +618,17 @@ def make_task_writer(encode_fn, out_dir: str,
         pend_bytes = 0
         # running per-(part, column) aggregate across this task's blocks
         agg: dict[tuple[int, str], dict] = {}
+        meta_cols = [c for c in _TASK_META_SCHEMA.names
+                     if c in BLOCKS_SCHEMA.names]
 
         def note(batch: pa.RecordBatch) -> None:
-            cols = batch.column(3).to_pylist()      # column
-            codecs = batch.column(4).to_pylist()    # codec
-            params = batch.column(5).to_pylist()    # codec_params
-            nv = batch.column(6).to_pylist()
-            rb = batch.column(7).to_pylist()
-            eb = batch.column(8).to_pylist()
-            klo = batch.column(11).to_pylist()
-            khi = batch.column(12).to_pylist()
-            klos = batch.column(13).to_pylist()
-            khis = batch.column(14).to_pylist()
-            pids = batch.column(0).to_pylist()
-            for i in range(batch.num_rows):
-                a = agg.setdefault((int(pids[i]), cols[i]), {
-                    "codec": codecs[i], "codec_params": "{}",
-                    "n_values": 0, "raw_bytes": 0, "enc_bytes": 0,
-                    "n_blocks": 0, "key_lo": None, "key_hi": None,
-                    "key_lo_s": None, "key_hi_s": None,
-                    "n_unzoned": 0, "n_unzoned_s": 0,
-                })
-                if a["codec_params"] == "{}" and params[i] not in ("", "{}"):
-                    a["codec_params"] = params[i]
-                a["n_values"] += int(nv[i])
-                a["raw_bytes"] += int(rb[i])
-                a["enc_bytes"] += int(eb[i])
-                a["n_blocks"] += 1
-                if klo[i] is None:
-                    a["n_unzoned"] += 1
-                else:
-                    a["key_lo"] = (klo[i] if a["key_lo"] is None
-                                   else min(a["key_lo"], klo[i]))
-                    a["key_hi"] = (khi[i] if a["key_hi"] is None
-                                   else max(a["key_hi"], khi[i]))
-                if klos[i] is None:
-                    a["n_unzoned_s"] += 1
-                else:
-                    a["key_lo_s"] = (klos[i] if a["key_lo_s"] is None
-                                     else min(a["key_lo_s"], klos[i]))
-                    a["key_hi_s"] = (khis[i] if a["key_hi_s"] is None
-                                     else max(a["key_hi_s"], khis[i]))
+            # one block row is a (part, column) aggregate of one block
+            rows = batch.select(meta_cols).to_pylist()
+            for r in rows:
+                r["n_blocks"] = 1
+                r["n_unzoned"] = int(r["key_lo"] is None)
+                r["n_unzoned_s"] = int(r["key_lo_s"] is None)
+            fold_task_meta(agg, rows)
 
         def flush_rg():
             nonlocal pend, pend_bytes, writer
@@ -631,22 +646,15 @@ def make_task_writer(encode_fn, out_dir: str,
             note(batch)
             pend.append(batch)
             pend_bytes += batch.nbytes
-            if pend_bytes >= row_group_bytes:
+            if pend_bytes >= ROW_GROUP_BYTES:
                 flush_rg()
         flush_rg()
         if writer is None:
             return  # empty task: no file, no metadata
         writer.close()
-        out = {k: [] for k in _TASK_META_SCHEMA.names}
-        for (pid, col), a in sorted(agg.items()):
-            out["file"].append(name)
-            out["part_id"].append(pid)
-            out["column"].append(col)
-            for k in ("codec", "codec_params", "n_values", "raw_bytes",
-                      "enc_bytes", "n_blocks", "key_lo", "key_hi",
-                      "key_lo_s", "key_hi_s", "n_unzoned", "n_unzoned_s"):
-                out[k].append(a[k])
-        yield pa.RecordBatch.from_pydict(out, schema=_TASK_META_SCHEMA)
+        yield pa.RecordBatch.from_pylist(
+            [{"file": name, **agg[k]} for k in sorted(agg)],
+            schema=_TASK_META_SCHEMA)
 
     return write_tasks
 

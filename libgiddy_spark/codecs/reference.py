@@ -63,7 +63,9 @@ def naive_for_bytes(x: np.ndarray) -> int:
             if signed
             else seg.min()
         )
-        w = max(w, max(_bits(int(v - ref)) for v in seg))
+        # offsets are modulo 2^64 (the signed min reinterpreted as
+        # uint64 sits above the positive values)
+        w = max(w, max(_bits((int(v) - int(ref)) % (1 << 64)) for v in seg))
     return total + (n * w + 7) // 8
 
 

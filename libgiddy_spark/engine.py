@@ -4,10 +4,14 @@ Encode lifecycle::
 
     register files -> resume filter (manifest)           [driver, metadata]
     -> per-chunk: footer byte stats -> salt fan-out      [driver, footers]
-    -> repartitionByRange(part_id, salt)                 [the ONE shuffle]
-    -> sortWithinPartitions(part_id, salt, sort_key)     [JVM sort]
-    -> mapInArrow(streaming group encoder)               [numpy/C kernels]
-    -> blocks parquet (temp dir + atomic rename)         [executors write]
+    -> rows to encode tasks, one of:
+         range:  repartitionByRange(part_id, salt)       [the ONE shuffle]
+                 -> sortWithinPartitions(part_id, salt, sort_key)
+         direct: task list of row-group slices           [no row shuffle]
+    -> mapInArrow(group encoder + task writer)           [numpy/C kernels]
+    -> each task writes its own block file, returns      [executors write]
+       per-(part, column) metadata rows
+    -> _FILES commit list + atomic rename of chunk dir   [driver]
     -> manifest lines per partition                      [driver commit point]
 
 Decode is shuffle-free: one task per block file streams whole
@@ -27,21 +31,25 @@ import pyarrow as pa
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from .blocks import BLOCKS_DDL, decode_group, make_encode_stream
+from .blocks import (
+    BLOCKS_DDL,
+    TASK_META_DDL,
+    decode_group,
+    fold_task_meta,
+    make_encode_stream,
+    make_task_writer,
+)
 from .manifest import Manifest
 from .skew import apply_salting, footer_byte_stats, salt_factors
 from .table_io import list_parquet_files, load_part_files, snapshot_id_of
 
 
-# Direct-path task-slicing knobs (see encode_files). Env-overridable so
-# a deployment can tune them without code changes; the defaults are
-# sized by measured per-task overhead vs kernel throughput — they are
-# NOT cluster-size dependent (a slice worth <30 ms of encode is pure
-# overhead on any cluster, and row-range re-decode amplification costs
-# the same bytes everywhere).
-_SLICE_FLOOR = int(os.environ.get(
-    "LIBGIDDY_SPARK_SLICE_FLOOR_BYTES", str(4 << 20)))
-_RG_AMP_CAP = int(os.environ.get("LIBGIDDY_SPARK_RG_AMP_CAP", "8"))
+# Task-slicing constants (see encode_files), sized by measured
+# per-task overhead vs kernel throughput — NOT cluster-size dependent
+# (a slice worth <30 ms of encode is pure overhead on any cluster, and
+# row-range re-decode amplification costs the same bytes everywhere).
+_SLICE_FLOOR = 4 << 20
+_RG_AMP_CAP = 8
 
 
 def _source_files(path: str) -> list[dict]:
@@ -102,7 +110,6 @@ def encode_files(
     exchange: str = "range",
     commit_status: str = "done",
     wap_staged: bool = False,
-    **_compat,
 ) -> dict:
     """Resumable chunked encode of the given (relpath, bytes) data
     files; partition = source data file, with STABLE part ids from the
@@ -136,6 +143,12 @@ def encode_files(
       fan-out), but a file's split granularity is its row-group count,
       so single-row-group monster files can't fan out (writers should
       emit many row groups — Iceberg defaults do).
+
+    Both paths end in the same write step: every encode task writes its
+    own block file (``blocks.make_task_writer``) and returns per-(part,
+    column) metadata rows; the driver commits exactly the returned file
+    set in a ``_FILES`` marker, renames the chunk dir, and appends the
+    manifest lines built from those rows.
     """
     t_start = time.time()
     snapshot_id = snapshot_id_of(source_path)
@@ -254,11 +267,6 @@ def encode_files(
                 f"encoded columns {data_cols!r} (zone maps, blooms and "
                 "block ordering derive from it)"
             )
-    else:
-        encode_fn = make_encode_stream(
-            data_cols, forced_codecs=forced_codecs, block_rows=block_rows,
-            zone_key=sort_key,
-        )
 
     prof = os.environ.get("SPARK_GRAFT_PROFILE") == "1"
     _pt = time.time()
@@ -292,6 +300,9 @@ def encode_files(
         factors = salt_factors(stats, target_bytes=eff_target)
         nslices = max(sum(factors.values()), 1)
         fanout: dict[int, int] = {}  # actual per-part task count
+        # rows fed to the task writer and the kernel that encodes them;
+        # stays None when every file of the chunk is empty (direct path)
+        rows_in, encode_fn = None, None
         _mark("footer_stats")
         if exchange == "direct":
             # ZERO-row-shuffle path: a salt slice = a contiguous run of
@@ -411,7 +422,7 @@ def encode_files(
                             r["codec"], r["params"], r["fsst"]
                         )
                 _mark("plan_job")
-                direct_fn = make_direct_encoder(
+                encode_fn = make_direct_encoder(
                     data_cols, sort_key=sort_key,
                     forced_codecs=forced_codecs, block_rows=block_rows,
                     plan=plan,
@@ -430,12 +441,11 @@ def encode_files(
                 # skips the round-robin EXCHANGE stage that
                 # .repartition(ntasks) added just to shuffle a tiny
                 # task list (~0.3 s fixed cost per job)
-                tdf = spark.createDataFrame(
+                rows_in = spark.createDataFrame(
                     spark.sparkContext.parallelize(tasks, ntasks),
                     "part_id int, salt int, rg_lo int, rg_hi int, "
                     "row_lo long, row_hi long, path string",
                 )
-            # every file empty -> tasks == [], handled at the write step
         else:
             sub = load_part_files(spark, source_path, chunk_files)
             if columns:
@@ -444,79 +454,43 @@ def encode_files(
             # sort makes groups contiguous so mapInArrow streams them with
             # no second shuffle (SURVEY.md §3.2)
             salted = apply_salting(sub, factors, key_col, shuffle_parts=nslices)
-            blocks = salted.sortWithinPartitions(
-                "part_id", "salt", sort_key
-            ).mapInArrow(encode_fn, schema=BLOCKS_DDL)
+            rows_in = salted.sortWithinPartitions("part_id", "salt", sort_key)
+            encode_fn = make_encode_stream(
+                data_cols, forced_codecs=forced_codecs, block_rows=block_rows,
+                zone_key=sort_key,
+            )
         _mark("task_build")
         tmp = os.path.join(blocks_root, f"_tmp_{chunk[0]}_{chunk[-1]}")
         final = os.path.join(blocks_root, f"chunk-{chunk[0]:05d}-{chunk[-1]:05d}")
         if os.path.exists(final):  # crashed between rename and manifest append
             shutil.rmtree(final)
         t0 = time.time()
-        mdf = None
-        if exchange == "direct":
-            # each TASK writes its own block parquet file with pyarrow
-            # and returns only per-(part, column) metadata rows: the
-            # encoded payloads never cross the Arrow->JVM boundary and
-            # the JVM parquet writer is skipped entirely (measured
-            # ~0.3 s of a 0.9 s webtext encode job; guide §4.1 — pass
-            # only the bytes the other side needs). Commit protocol:
-            # attempt-unique file names, the driver keeps exactly the
-            # returned file set (stray failed-attempt files are removed
-            # here), records it in a _FILES marker that decode trusts,
-            # then atomically renames the chunk dir — the same
-            # write-unique/commit-by-list pattern as Spark's own output
-            # protocol, with the manifest line as the commit point.
-            shutil.rmtree(tmp, ignore_errors=True)
-            os.makedirs(tmp, exist_ok=True)
-            meta_rows: list[dict] = []
-            if tasks:
-                from .blocks import TASK_META_DDL, make_task_writer
-
-                meta_rows = [r.asDict() for r in tdf.mapInArrow(
-                    make_task_writer(direct_fn, tmp), schema=TASK_META_DDL
-                ).collect()]
-            committed = {r["file"] for r in meta_rows}
-            for f in os.listdir(tmp):
-                if f.endswith(".parquet") and f not in committed:
-                    os.remove(os.path.join(tmp, f))
-            with open(os.path.join(tmp, "_FILES"), "w") as f:
-                f.write("\n".join(sorted(committed)))
-            mdf = _merge_task_meta(meta_rows)
-        else:
-            # payloads are already codec-compressed; parquet-level
-            # snappy on top costs CPU both directions for ~no size win
-            # — and parquet's dictionary encoding must be OFF: building
-            # dictionary pages over MB-sized unique payload blobs costs
-            # ~13x the write time for zero size win (measured 12.7 s ->
-            # 0.9 s on 790 MB of blocks)
-            (blocks.write.mode("overwrite")
-             .option("compression", "none")
-             .option("parquet.enable.dictionary", "false")
-             # 32 MB row groups: the streaming decoder's peak memory is
-             # one row group + one logical group, so finer row groups
-             # keep decode tasks inside the warm allocator arena
-             # (default 128 MB quadruples that for zero read-side
-             # benefit — payloads are opaque blobs, no intra-row-group
-             # stats matter)
-             .option("parquet.block.size", str(32 * 1024 * 1024))
-             .parquet(tmp))
+        # each TASK writes its own block parquet file with pyarrow and
+        # returns only per-(part, column) metadata rows, on both paths
+        # (blocks.make_task_writer). Commit protocol: attempt-unique
+        # file names, the driver keeps exactly the returned file set
+        # (stray failed-attempt files are removed here), records it in
+        # a _FILES marker that decode trusts, then atomically renames
+        # the chunk dir — the same write-unique/commit-by-list pattern
+        # as Spark's own output protocol, with the manifest line as the
+        # commit point.
+        shutil.rmtree(tmp, ignore_errors=True)
+        os.makedirs(tmp)
+        meta_rows: list[dict] = []
+        if rows_in is not None:
+            meta_rows = [r.asDict() for r in rows_in.mapInArrow(
+                make_task_writer(encode_fn, tmp), schema=TASK_META_DDL
+            ).collect()]
+        committed = {r["file"] for r in meta_rows}
+        for f in os.listdir(tmp):
+            if f.endswith(".parquet") and f not in committed:
+                os.remove(os.path.join(tmp, f))
+        with open(os.path.join(tmp, "_FILES"), "w") as f:
+            f.write("\n".join(sorted(committed)))
         with open(os.path.join(tmp, "_PARTS"), "w") as f:
             f.write(" ".join(str(int(p)) for p in chunk))
         os.rename(tmp, final)  # atomic commit of the chunk's data
         _mark("write_job")
-        if mdf is None:
-            # per-part metrics from the written files' METADATA columns
-            # (payload never read). Driver-side threaded pyarrow read —
-            # a chunk holds O(cores) task files, so this replaces a
-            # whole second Spark job (scan + shuffle + collect,
-            # ~0.5-1 s fixed cost per chunk; VERDICT r3 #8) with
-            # milliseconds of footer work. (The direct path returns the
-            # same rows through the encode job itself — zero extra
-            # reads.) Chunks beyond the file-count guard fall back to
-            # the distributed aggregation.
-            mdf = _chunk_metrics_rows(spark, final)
-        _mark("metrics")
         per_part: dict[int, dict] = {
             int(p): {
                 "part_id": int(p),
@@ -529,7 +503,9 @@ def encode_files(
             }
             for p in chunk
         }
-        for r in mdf:
+        merged: dict[tuple[int, str], dict] = {}
+        fold_task_meta(merged, meta_rows)
+        for _, r in sorted(merged.items()):
             e = per_part[int(r["part_id"])]
             # part-level zone map in the manifest: lets a key-range
             # decode prune whole PARTS/chunk dirs driver-side, before
@@ -1181,134 +1157,6 @@ def _committed_block_files(
                 if f.endswith(".parquet") and not f.startswith(("_", ".")):
                     files.append(os.path.join(root, f))
     return sorted(files)
-
-
-_METRIC_COLS = [
-    "part_id", "column", "codec", "n_values", "raw_bytes", "enc_bytes",
-    "codec_params", "key_lo", "key_hi", "key_lo_s", "key_hi_s",
-]
-
-
-def _merge_task_meta(meta_rows: list[dict]) -> list[dict]:
-    """Merge the encode tasks' per-(file, part, column) metadata rows
-    (blocks.TASK_META_DDL) into one row per (part, column) — the same
-    shape _chunk_metrics_rows derives from written footers, computed
-    from the job's own return value instead of a re-read."""
-    agg: dict[tuple[int, str], dict] = {}
-    for r in meta_rows:
-        key = (int(r["part_id"]), r["column"])
-        a = agg.get(key)
-        if a is None:
-            agg[key] = a = {
-                "part_id": int(r["part_id"]), "column": r["column"],
-                "codec": r["codec"], "codec_params": "{}",
-                "n_values": 0, "raw_bytes": 0, "enc_bytes": 0,
-                "n_blocks": 0, "key_lo": None, "key_hi": None,
-                "key_lo_s": None, "key_hi_s": None,
-                "n_unzoned": 0, "n_unzoned_s": 0,
-            }
-        if a["codec_params"] == "{}" and r["codec_params"] not in ("", "{}"):
-            a["codec_params"] = r["codec_params"]
-        a["n_values"] += int(r["n_values"])
-        a["raw_bytes"] += int(r["raw_bytes"])
-        a["enc_bytes"] += int(r["enc_bytes"])
-        a["n_blocks"] += int(r["n_blocks"])
-        a["n_unzoned"] += int(r["n_unzoned"])
-        a["n_unzoned_s"] += int(r["n_unzoned_s"])
-        if r["key_lo"] is not None:
-            a["key_lo"] = (int(r["key_lo"]) if a["key_lo"] is None
-                           else min(a["key_lo"], int(r["key_lo"])))
-            a["key_hi"] = (int(r["key_hi"]) if a["key_hi"] is None
-                           else max(a["key_hi"], int(r["key_hi"])))
-        if r["key_lo_s"] is not None:
-            a["key_lo_s"] = (r["key_lo_s"] if a["key_lo_s"] is None
-                             else min(a["key_lo_s"], r["key_lo_s"]))
-            a["key_hi_s"] = (r["key_hi_s"] if a["key_hi_s"] is None
-                             else max(a["key_hi_s"], r["key_hi_s"]))
-    return [agg[k] for k in sorted(agg)]
-
-
-def _chunk_metrics_rows(spark: SparkSession, final: str) -> list[dict]:
-    """Per-(part, column) metric rows for one committed chunk dir,
-    aggregated from the block files' metadata columns (payload bytes
-    never touched). Threaded pyarrow in the driver for the normal
-    O(cores)-files case; a chunk with very many files (huge clusters)
-    falls back to the distributed groupBy so driver work stays
-    bounded."""
-    import concurrent.futures as cf
-
-    import pyarrow.parquet as pq
-
-    files = sorted(
-        os.path.join(final, f)
-        for f in os.listdir(final)
-        if f.endswith(".parquet") and not f.startswith(("_", "."))
-    )
-    if len(files) > 512:
-        rows = (
-            spark.read.parquet(final)
-            .groupBy("part_id", "column")
-            .agg(
-                F.first("codec").alias("codec"),
-                F.sum("n_values").alias("n_values"),
-                F.sum("raw_bytes").alias("raw_bytes"),
-                F.sum("enc_bytes").alias("enc_bytes"),
-                F.count("*").alias("n_blocks"),
-                F.first("codec_params").alias("codec_params"),
-                F.min("key_lo").alias("key_lo"),
-                F.max("key_hi").alias("key_hi"),
-                F.min("key_lo_s").alias("key_lo_s"),
-                F.max("key_hi_s").alias("key_hi_s"),
-                F.sum(F.when(F.col("key_lo").isNull(), 1).otherwise(0))
-                .alias("n_unzoned"),
-                F.sum(F.when(F.col("key_lo_s").isNull(), 1).otherwise(0))
-                .alias("n_unzoned_s"),
-            )
-        ).collect()
-        return [r.asDict() for r in rows]
-
-    def rd(p: str) -> pa.Table:
-        f = pq.ParquetFile(p)
-        have = set(f.schema_arrow.names)
-        return f.read(columns=[c for c in _METRIC_COLS if c in have])
-
-    if not files:
-        return []
-    with cf.ThreadPoolExecutor(min(16, len(files))) as ex:
-        tables = [t for t in ex.map(rd, files) if t.num_rows]
-    if not tables:
-        return []
-    df = pa.concat_tables(tables, promote_options="default").to_pandas()
-    out: list[dict] = []
-    for (pid, col), sub in df.groupby(["part_id", "column"], sort=False):
-        # codec is constant per (part, column); the real codec_params
-        # live on each salt slice's block_seq-0 row, the rest are "{}"
-        params = next(
-            (p for p in sub["codec_params"] if p and p != "{}"), "{}"
-        )
-        klo = sub["key_lo"].dropna()
-        khi = sub["key_hi"].dropna()
-        klo_s = sub["key_lo_s"].dropna()
-        khi_s = sub["key_hi_s"].dropna()
-        out.append(
-            {
-                "part_id": int(pid),
-                "column": col,
-                "codec": sub["codec"].iloc[0],
-                "n_values": int(sub["n_values"].sum()),
-                "raw_bytes": int(sub["raw_bytes"].sum()),
-                "enc_bytes": int(sub["enc_bytes"].sum()),
-                "n_blocks": int(len(sub)),
-                "codec_params": params,
-                "key_lo": int(klo.min()) if len(klo) else None,
-                "key_hi": int(khi.max()) if len(khi) else None,
-                "key_lo_s": klo_s.min() if len(klo_s) else None,
-                "key_hi_s": khi_s.max() if len(khi_s) else None,
-                "n_unzoned": int(sub["key_lo"].isna().sum()),
-                "n_unzoned_s": int(sub["key_lo_s"].isna().sum()),
-            }
-        )
-    return out
 
 
 def delete_rows(out_dir: str, key_col: str, keys: list) -> dict:
@@ -2469,7 +2317,6 @@ def roundtrip_df(
     key_col: str,
     columns: list[str] | None = None,
     forced_codecs: dict[str, str] | None = None,
-    num_parts: int = 8,
     out_dir: str | None = None,
     exchange: str = "range",
 ) -> DataFrame:
@@ -2500,7 +2347,6 @@ def roundtrip_df(
         source_path,
         out,
         key_col=key_col,
-        num_parts=num_parts,
         forced_codecs=forced_codecs,
         columns=columns,
         exchange=exchange,

@@ -4,7 +4,7 @@
     zip -r engine.zip libgiddy_spark
     spark-submit --py-files engine.zip libgiddy_spark/jobs/encode_job.py \
         --source /path/to/snapshot --out /path/to/encoded \
-        --key-col url [--num-parts 4096] [--chunk-parts 64] \
+        --key-col url [--chunk-parts 64] [--exchange range|direct] \
         [--target-salt-bytes 134217728] [--columns url,text,lang]
 
 Resumable: re-running with the same --out skips partitions whose

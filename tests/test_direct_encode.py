@@ -31,12 +31,14 @@ def test_balanced_bounds():
     assert b[-1][1] == 8 and len(b) == 3
 
 
+@pytest.mark.parametrize("exchange", ["range", "direct"])
 @pytest.mark.parametrize("table,key", [("documents", "doc_id"),
                                        ("events", "event_id")])
-def test_direct_roundtrip_bit_identical(spark, tmp_path, table, key):
+def test_direct_roundtrip_bit_identical(spark, tmp_path, table, key,
+                                        exchange):
     src = f"{SF}/{table}.parquet"
     out = str(tmp_path / f"d_{table}")
-    encode_snapshot(spark, src, out, key_col=key, exchange="direct")
+    encode_snapshot(spark, src, out, key_col=key, exchange=exchange)
     dec = decode_blocks(spark, out, pq.read_schema(src))
     rep = verify_roundtrip(spark.read.parquet(src), dec, key)
     assert rep["ok"], rep
@@ -125,15 +127,35 @@ def test_row_range_stream_slice_exact(tmp_path):
             "path": [src]})
         outs = list(enc(iter([task])))
         nv = sum(v for b in outs
-                 for c, v in zip(b.column(3).to_pylist(),
-                                 b.column(6).to_pylist()) if c == "k")
+                 for c, v in zip(b.column("column").to_pylist(),
+                                 b.column("n_values").to_pylist())
+                 if c == "k")
         assert nv == rhi - rlo, (rg_lo, rg_hi, rlo, rhi, nv)
         # zone map pins the exact rows, not just the count
-        klo = min(v for b in outs for v in b.column(11).to_pylist()
+        klo = min(v for b in outs for v in b.column("key_lo").to_pylist()
                   if v is not None)
-        khi = max(v for b in outs for v in b.column(12).to_pylist()
+        khi = max(v for b in outs for v in b.column("key_hi").to_pylist()
                   if v is not None)
         assert (klo, khi) == (base + rlo, base + rhi - 1)
+
+
+def test_row_range_task_past_span_fails_loudly(tmp_path):
+    """A hand-built row-range task whose rows lie past its row groups
+    must raise a ValueError naming the file and the span, not encode
+    zero rows."""
+    import pyarrow as pa
+
+    from libgiddy_spark.blocks import make_direct_encoder
+
+    src = str(tmp_path / "t.parquet")
+    pq.write_table(pa.table({"k": pa.array(range(1000), pa.int64())}), src,
+                   row_group_size=300)  # row group 3 holds 100 rows
+    enc = make_direct_encoder(["k"], sort_key="k")
+    task = pa.RecordBatch.from_pydict({
+        "part_id": [0], "salt": [0], "rg_lo": [3], "rg_hi": [4],
+        "row_lo": [150], "row_hi": [200], "path": [src]})
+    with pytest.raises(ValueError, match=r"\[150, 200\).*t\.parquet"):
+        list(enc(iter([task])))
 
 
 def test_direct_plan_moves_no_source_rows(spark):
@@ -172,15 +194,16 @@ def test_direct_resume_skips_done_parts(spark, tmp_path):
     assert dec.count() == docs.count()
 
 
-def test_direct_commit_by_list(spark, tmp_path):
-    """r6 task-side writes: the chunk dir's _FILES marker IS the
-    committed file set — a stray parquet file planted in the dir (a
-    zombie task attempt's leftover) is invisible to decode, and a
-    listed-but-missing file fails loudly instead of silently losing
-    rows."""
+@pytest.mark.parametrize("exchange", ["range", "direct"])
+def test_direct_commit_by_list(spark, tmp_path, exchange):
+    """Task-side writes on both encode paths: the chunk dir's _FILES
+    marker IS the committed file set — a stray parquet file planted in
+    the dir (a zombie task attempt's leftover) is invisible to decode,
+    and a listed-but-missing file fails loudly instead of silently
+    losing rows."""
     src = f"{SF}/documents.parquet"
     out = str(tmp_path / "cbl")
-    encode_snapshot(spark, src, out, key_col="doc_id", exchange="direct")
+    encode_snapshot(spark, src, out, key_col="doc_id", exchange=exchange)
     schema = pq.read_schema(src)
     n = decode_blocks(spark, out, schema).count()
     blocks = os.path.join(out, "blocks")

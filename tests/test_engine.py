@@ -294,6 +294,16 @@ def test_decode_part_filter_lists_only_needed_chunks(spark, tmp_path):
     assert dec.select("part_id").distinct().collect()[0][0] == 2
 
 
+def test_encode_rejects_unknown_keyword(spark, tmp_path):
+    """A misspelled option fails at the call instead of being dropped
+    (chunk_part for chunk_parts would silently keep the default)."""
+    with pytest.raises(TypeError, match="chunk_part"):
+        encode_snapshot(spark, f"{SF}/documents.parquet",
+                        str(tmp_path / "typo"), key_col="doc_id",
+                        chunk_part=1)
+    assert not os.path.exists(tmp_path / "typo")
+
+
 def test_encode_plan_single_exchange(spark):
     """The encode path's ONE wide op is the range exchange on
     (part_id, salt); anything more is a regression (e.g. a per-row
